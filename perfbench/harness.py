@@ -38,7 +38,7 @@ MB = 1024 * 1024
 # End-to-end metrics: every workload prints all of them (with --trace 0).
 # op_p50_ms is the median of the workload's operation: one pass over the
 # 16 queries (batch_suite), one window's append->emit latency
-# (stream_window), one whole ingest (store_ingest).
+# (stream_window), one micro-batch (store_ingest).
 END_TO_END = {"setup_s": "s", "peak_rss_mb": "MB", "op_p50_ms": "ms"}
 
 # Per-layer metrics (with --trace 1). A workload that never enters a layer

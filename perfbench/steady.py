@@ -1,13 +1,14 @@
 """Steadiness check: runs every workload in two sets of runs and reports,
 per end-to-end metric, each set's median and quartiles, the spread
 (interquartile distance over the median) and whether the two sets agree
-within the bound ``BENCHMARK.json`` fixes. Optional traced runs give the
-tracing overhead (traced minus untraced ``op_p50_ms``).
+within the bound ``BENCHMARK.json`` fixes. The workloads and the run
+length come from ``BENCHMARK.json``. Optional traced runs give the tracing
+overhead (traced minus untraced ``op_p50_ms``).
 
-    python3 perfbench/steady.py --runs 10 --seconds 5 [--traced 2] [--sets 2]
+    python3 perfbench/steady.py --runs 10 [--traced 1]
 
-Run from the checkout root. Exits non-zero when a set disagrees, a spread
-exceeds its bound (``setup_s`` excepted) or a run fails.
+Run from the checkout root. Exits non-zero when the sets disagree, a spread
+exceeds its bound or a run fails.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+SETS = 2
 
 
 def one_run(workload: str, seed: int, seconds: float, trace: int) -> dict:
@@ -36,55 +38,32 @@ def one_run(workload: str, seed: int, seconds: float, trace: int) -> dict:
     return res
 
 
-def quartiles(xs) -> tuple[float, float, float]:
-    q1, q2, q3 = statistics.quantiles(xs, n=4)
-    return q1, q2, q3
-
-
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--runs", type=int, default=10, help="runs per set and workload")
-    ap.add_argument("--sets", type=int, default=2)
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="run length (default: BENCHMARK.json run_seconds)")
     ap.add_argument("--traced", type=int, default=0, help="traced runs per workload")
-    ap.add_argument("--workload", action="append", help="only these workloads")
-    ap.add_argument("--out", help="append every run's result here (JSON lines)")
     a = ap.parse_args(argv)
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
-    seconds = a.seconds or spec["run_seconds"]
-    workloads = a.workload or [w["name"] for w in spec["workloads"]]
+    seconds = spec["run_seconds"]
+    workloads = [w["name"] for w in spec["workloads"]]
     bounds = {m["name"]: m["bound"] for m in spec["end_to_end"]}
     runs: dict[tuple[str, int], list[dict]] = {}
-    out = open(a.out, "a") if a.out else None
-    try:
-        for s in range(a.sets):
-            for w in workloads:
-                for i in range(a.runs):
-                    seed = 1000 * (s + 1) + i
-                    res = one_run(w, seed, seconds, 0)
-                    runs.setdefault((w, s), []).append(res)
-                    if out:
-                        out.write(json.dumps({"workload": w, "set": s, "seed": seed, **res}) + "\n")
-                        out.flush()
-        traced = {}
+    for s in range(SETS):
         for w in workloads:
-            for i in range(a.traced):
-                res = one_run(w, 9000 + i, seconds, 1)
-                traced.setdefault(w, []).append(res)
-                if out:
-                    out.write(json.dumps({"workload": w, "traced": True, **res}) + "\n")
-    finally:
-        if out:
-            out.close()
+            for i in range(a.runs):
+                runs.setdefault((w, s), []).append(one_run(w, 1000 * (s + 1) + i, seconds, 0))
+    traced = {}
+    for w in workloads:
+        for i in range(a.traced):
+            traced.setdefault(w, []).append(one_run(w, 9000 + i, seconds, 1))
 
     ok = True
     print(f"run_seconds={seconds:g}, {a.runs} runs per set, seeds 1000+i (set 1), "
-          "2000+i (set 2), ...")
+          "2000+i (set 2)")
     for w in workloads:
-        sets = [runs[(w, s)] for s in range(a.sets)]
+        sets = [runs[(w, s)] for s in range(SETS)]
         shares = {r["failed"] / r["attempted"] for rs in sets for r in rs}
         walls = [r["wall_s"] for rs in sets for r in rs]
         print(f"\n{w}: attempted/run {statistics.median(r['attempted'] for r in sets[0]):g}, "
@@ -95,14 +74,13 @@ def main(argv=None) -> int:
             cells, meds = [], []
             for rs in sets:
                 xs = [r["metrics"][m]["value"] for r in rs]
-                q1, q2, q3 = quartiles(xs)
+                q1, q2, q3 = statistics.quantiles(xs, n=4)
                 spread = (q3 - q1) / q2
                 meds.append(q2)
                 cells.append(f"{q2:10.4g} [{q1:.4g}, {q3:.4g}] spread {spread:6.1%}")
-                if m != "setup_s" and spread > bound:
-                    ok = False
-            shift = max(meds[1:] or [meds[0]]) / meds[0] - 1
-            agree = all(abs(x / meds[0] - 1) <= bound for x in meds[1:])
+                ok &= spread <= bound
+            shift = meds[1] / meds[0] - 1
+            agree = abs(shift) <= bound
             ok &= agree
             print(f"  {m:12s} bound {bound:5.1%} | " + " | ".join(cells)
                   + f" | shift {shift:+6.1%} {'agree' if agree else 'DISAGREE'}")
